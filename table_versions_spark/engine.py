@@ -412,10 +412,14 @@ class VersionedEngine:
                 cluster_by: list[str] | None = None,
                 cluster_mode: str = "range",
                 cdc: DataFrame | None = None,
-                conflict_fold=None) -> CommitResult:
+                conflict_fold=None,
+                range_partitions: int | None = None) -> CommitResult:
         """insert() plus ``drop_partitions``: partitions to REMOVE in the
         same commit unless the write itself re-adds them — lets delete()
         empty a partition atomically (write + remove = one commit).
+
+        ``range_partitions``: file count of a clustered snapshot write
+        (``compact``'s ``target_partitions``); see ``_write_snapshot``.
 
         ``cdc``: the exactly-changed rows of this commit (logical table
         columns + ``_change_type`` delete|insert), written as ``_cdc/``
@@ -513,7 +517,8 @@ class VersionedEngine:
             if defn.is_snapshot:
                 ops = self._write_snapshot(df, defn, version,
                                            cluster_by=cluster_by,
-                                           drop_col=drop_col)
+                                           drop_col=drop_col,
+                                           range_partitions=range_partitions)
                 self._validate_staged_checks(defn, ops, version)
                 if mode == "append" \
                         and isinstance(previous, SnapshotTableVersion) \
@@ -1630,7 +1635,8 @@ class VersionedEngine:
     def _write_snapshot(self, df: DataFrame, defn: TableDefinition,
                         version: Version,
                         cluster_by: list[str] | None = None,
-                        drop_col: str | None = None) -> list:
+                        drop_col: str | None = None,
+                        range_partitions: int | None = None) -> list:
         """Snapshot write: ``<location>/<label>/``
         (reference ``VersionContext.scala:75-78``).
 
@@ -1638,16 +1644,20 @@ class VersionedEngine:
         output file covers a tight, near-disjoint value range — the
         per-file footer stats then let ``read(stats_filter=...)`` skip
         whole files (OPTIMIZE/ZORDER-style clustering, single-column form).
-        On a bucketed table bucketing owns the partitioning, so clustering
-        only sorts within each bucket."""
+        A clustered write produces one file per range partition:
+        ``range_partitions`` of them when given (``compact``'s
+        ``target_partitions``), else the writing session's
+        ``defaultParallelism``. On a bucketed table bucketing owns the
+        partitioning, so clustering only sorts within each bucket."""
         if defn.bucket_count:
             df = df.repartition(defn.bucket_count,
                                 *[F_col(c) for c in defn.bucket_columns])
             if cluster_by:
                 df = df.sortWithinPartitions(*cluster_by)
         elif cluster_by:
-            df = (df.repartitionByRange(
-                      self.spark.sparkContext.defaultParallelism, *cluster_by)
+            n = (range_partitions
+                 or self.spark.sparkContext.defaultParallelism)
+            df = (df.repartitionByRange(n, *cluster_by)
                   .sortWithinPartitions(*cluster_by))
         if drop_col:
             # projection preserves the partitioning and sort just arranged
@@ -3157,7 +3167,9 @@ class VersionedEngine:
         defn, log = self._log(table)
         base_fold = log.head_fold(defn.name)
         df = self.read(table)
-        if defn.is_snapshot and target_partitions:
+        if defn.is_snapshot and target_partitions and not cluster_by:
+            # a clustered write range-partitions into target_partitions
+            # files itself (_write_snapshot); a coalesce there is undone
             df = df.coalesce(target_partitions)
         # partitioned case: insert's distribute=True already clusters by
         # partition columns — one shuffle total. Current partitions the
@@ -3172,7 +3184,8 @@ class VersionedEngine:
         return self._insert(df, table, user_id, "compaction",
                             drop_partitions=drop,
                             cluster_by=cluster_by, cluster_mode=cluster_mode,
-                            conflict_fold=base_fold)
+                            conflict_fold=base_fold,
+                            range_partitions=target_partitions)
 
     def _all_version_dirs(self, defn: TableDefinition) -> list[str]:
         """Every version-label directory on disk for this table."""

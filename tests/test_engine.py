@@ -878,6 +878,22 @@ class TestDataSkipping:
         assert len(qy.inputFiles()) < total
         assert engine.read("db.cz").count() == 64 * 64
 
+    def test_compact_zorder_honours_target_partitions(self, spark, engine):
+        """A clustered compact of a snapshot table writes target_partitions
+        files — fewer or more than the session's defaultParallelism."""
+        import itertools
+
+        engine.create_table("db.ct", schema_ddl="x bigint, y bigint")
+        rows = [(x, y) for x, y in itertools.product(range(64), range(64))]
+        engine.insert(spark.createDataFrame(rows, "x bigint, y bigint")
+                      .repartition(16), "db.ct", "u", "unclustered")
+        for n in (2, 12):
+            engine.compact("db.ct", target_partitions=n,
+                           cluster_by=["x", "y"], cluster_mode="zorder")
+            full = engine.read("db.ct")
+            assert len(full.inputFiles()) == n
+            assert full.count() == 64 * 64
+
     def test_zorder_skipping_prunes_on_both_columns(self, spark, engine):
         """Morton-clustered layout: every file covers a small (x, y)
         rectangle, so per-file stats prune range lookups on EITHER column
@@ -895,7 +911,14 @@ class TestDataSkipping:
         assert full.count() == 64 * 64
         assert "__tvx_zorder" not in full.columns
         total = len(full.inputFiles())
-        assert total > 4  # multi-file layout, else skipping proves nothing
+        # multi-file layout, else skipping proves nothing. 4 files (one per
+        # Morton quadrant) is the fewest that can prune on both columns:
+        # z-bit 2k+i holds bit k of column i, so the top z-bit is y's top
+        # bucket bit and the next is x's. 2 contiguous z-range files each
+        # span all of x; 3 files all touch x <= 7. At 4 files a
+        # lexicographic (x, y) sort would give 4 x-bands each spanning all
+        # of y, so the qy check below still tells the two orders apart.
+        assert total >= 4
         qx = engine.read("db.zo", stats_filter={"x": (0, 7)})
         qy = engine.read("db.zo", stats_filter={"y": (0, 7)})
         assert len(qx.inputFiles()) < total
